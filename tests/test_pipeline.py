@@ -122,14 +122,23 @@ def test_window_path_regexes_case_insensitive(spark):
     assert got[3] == want[3] == "lemma 1.2"
 
 
-def test_triple_groups_match_sequential_oracle(spark, pages, entity_dict):
+@pytest.mark.parametrize(
+    "labeler, join_strategy",
+    [("fused", "auto"), ("fused", "salted"), ("window", "auto")],
+)
+def test_triple_groups_match_sequential_oracle(
+    spark, pages, entity_dict, labeler, join_strategy
+):
     """Provenance groups (min span group per triple) must match the
-    sequential oracle — the surface behind the kg_triples DuckDB gate."""
+    sequential oracle — the surface behind the kg_triples DuckDB gate —
+    on every labeler route and dictionary-join regime."""
     from theoremkb_spark.corpus.oracle import oracle_triples_grouped
 
     got = {
         (r.subj, r.pred, r.obj, r.url): r.group
-        for r in build_kg(spark, pages, entity_dict).collect()
+        for r in build_kg(
+            spark, pages, entity_dict, labeler=labeler, join_strategy=join_strategy
+        ).collect()
     }
     exp = oracle_triples_grouped(list(build_corpus(N_DOCS)), entity_dict_rows(N_DOCS))
     assert got == exp

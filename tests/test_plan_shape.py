@@ -75,10 +75,14 @@ def test_kg_plan_shape(spark, tmp_path):
     # pass (conditional-explode + a single dico join) and the rollup
     # groupBy(subj, pred, obj, url) reuses the url repartition's
     # HashPartitioning — a regression that re-shuffles the triples by
-    # their full key (the old union form's exchange) shows up as a
-    # hashpartitioning on subj
+    # their full key shows up as a hashpartitioning on subj
     assert "hashpartitioning(subj" not in plan, "triple rollup re-shuffles"
-    assert "Generate explode" in plan or "Generate" in plan
+    # ONE explode, over the two-element array of conditional triples
+    # (statement_of / cites first, proved_in / defined_in second)
+    (gen,) = [ln for ln in plan.splitlines() if "Generate " in ln]
+    head, tail = gen.split(" END, CASE WHEN ")  # exactly two CASE elements
+    assert "Generate explode(array(CASE WHEN " in head, gen
+    assert "statement_of" in head and "proved_in" in tail and "defined_in" in tail
 
 
 def test_fuzzy_link_plan_broadcasts_dictionary(spark):

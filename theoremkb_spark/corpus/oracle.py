@@ -97,7 +97,7 @@ def oracle_doc_triples_grouped(
     ``dico`` maps this doc's citation tags to (already canonicalized)
     target urls. Mirrors extract_links (extract_graph.py:232-288) with the
     triple mapping frozen in FIXTURES.md §6; the group value matches the
-    pipeline's ``min(group)`` dedup discipline (runner.build_triples),
+    pipeline's ``min(group)`` dedup discipline (runner.build_triples_fused),
     with -1 for doc-wide paper-level citations.
     """
     url = doc.url

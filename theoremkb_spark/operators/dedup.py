@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plancheck import fits_broadcast
 from .textquality import fingerprint
 
 # caches of the most recent ngram_jaccard_pairs call, released by the
@@ -97,14 +98,6 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     )
 
 
-def _estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's pre-execution size estimate of a plan (file sizes for
-    scans, propagated through projections/filters; Long.MaxValue for
-    driver-local frames). Same signal pipeline/link.py reads for its
-    auto broadcast-vs-salted decision."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
 # Auto-sizing threshold for the hot-shingle anti-join: under this
 # estimated SOURCE size the hot set (bounded by source-bytes/cap
 # distinct shingles) broadcasts in the low MBs; past it nothing
@@ -138,7 +131,7 @@ def capped_shingles(
     shuffles both sides by shingle — the hot set then never exists as
     a single in-memory collection anywhere. An unknowable estimate
     (driver-local frames, which fit in driver memory by construction —
-    the same convention pipeline/link.py uses) counts as small;
+    plancheck.fits_broadcast's convention) counts as small;
     ``source=None`` keeps the historical broadcast behaviour for
     callers that know their corpus is small.
 
@@ -154,11 +147,7 @@ def capped_shingles(
         .filter(F.col("_df") > max_doc_freq)
         .select(key)
     )
-    _unknown = (1 << 63) - 1
-    if source is None or (
-        (est := _estimated_bytes(source)) == _unknown
-        or est <= broadcast_max_source_bytes
-    ):
+    if source is None or fits_broadcast(source, broadcast_max_source_bytes):
         hot = F.broadcast(hot)
     return sh.join(hot, key, "left_anti")
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.joins import salted_join
+from ..plancheck import fits_broadcast
 
 # Caches of the most recent fuzzy_link_lsh call, released by the NEXT
 # call. SINGLE-FLIGHT ASSUMPTION: a second call unpersists the first
@@ -44,28 +45,6 @@ _last_caches: list = []
 # regime tests pin both branches with a forced threshold.
 BROADCAST_DICT_MAX_BYTES = 64 << 20
 
-# Catalyst reports Long.MaxValue when a plan's size is unknowable pre-
-# execution — in this engine that is exactly the driver-created local
-# frames (createDataFrame dictionaries), which fit in driver memory by
-# construction. File-backed inputs (the at-scale case) always carry real
-# file-size stats, so the threshold governs where it matters; callers
-# with an unknown-stats frame they KNOW is big pass strategy="salted".
-_STATS_UNKNOWN = (1 << 63) - 1
-
-
-def estimated_bytes(df: DataFrame) -> int:
-    """Catalyst's pre-execution size estimate for a plan: file sizes for
-    scans, propagated through projections and filters; ``_STATS_UNKNOWN``
-    for driver-local/RDD-backed plans. No job is triggered — this is the
-    same signal the planner's own broadcast decision reads, surfaced for
-    strategy selection."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def _fits_broadcast(df: DataFrame, max_bytes: int) -> bool:
-    est = estimated_bytes(df)
-    return est == _STATS_UNKNOWN or est <= max_bytes
-
 
 def _resolve(
     df: DataFrame,
@@ -77,7 +56,7 @@ def _resolve(
     """Left-join df(url, tag, ...) against dico(url, tag, pdf_to_canon)."""
     if strategy == "auto":
         strategy = (
-            "broadcast" if _fits_broadcast(dico, broadcast_max_bytes) else "salted"
+            "broadcast" if fits_broadcast(dico, broadcast_max_bytes) else "salted"
         )
     if strategy == "broadcast":
         return df.join(F.broadcast(dico), ["url", "tag"], "left")
@@ -86,37 +65,12 @@ def _resolve(
     raise ValueError(f"unknown join strategy: {strategy}")
 
 
-def link_extra_mentions(
-    mentions: DataFrame, dico: DataFrame, strategy: str = "auto", salt: int = 8
-) -> DataFrame:
-    """extra-kind mention rows -> + resolved `target` column."""
-    extra = mentions.filter(F.col("kind") == "extra").withColumn(
-        "tag", F.col("ref_tag")
-    )
-    resolved = _resolve(extra, dico, strategy, salt)
-    return resolved.withColumn(
-        "target",
-        F.coalesce(F.col("pdf_to_canon"), F.concat(F.lit("unresolved:"), F.col("tag"))),
-    ).drop("pdf_to_canon", "tag")
-
-
-def _grams_expr(text_col: str, n: int):
-    """Distinct non-empty character n-grams as an ARRAY column. Strings
-    shorter than ``n`` contribute themselves whole (the ``greatest(len -
-    (n-1), 1)`` branch); empty strings contribute nothing."""
-    return F.expr(
-        f"filter(array_distinct(transform("
-        f"sequence(1, greatest(length({text_col}) - {n - 1}, 1)),"
-        f" i -> substring({text_col}, i, {n}))), x -> length(x) > 0)"
-    )
-
-
 def char_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> DataFrame:
     """-> (id, shingle): distinct character n-grams per string, long
     form. JVM-only, and deliberately explode-then-filter: a filter()
     LAMBDA inside the array is interpreted per element (the HOF trap —
-    see shingle_stats), while the post-explode length predicate stays in
-    whole-stage codegen."""
+    see the measured-trap note in fuzzy_link_lsh), while the
+    post-explode length predicate stays in whole-stage codegen."""
     grams = F.expr(
         f"array_distinct(transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)),"
         f" i -> substring({text_col}, i, {n})))"
@@ -124,32 +78,6 @@ def char_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 5) -> Data
     return (
         df.select(F.col(id_col).alias("id"), F.explode(grams).alias("shingle"))
         .filter(F.length("shingle") > 0)
-    )
-
-
-def shingle_stats(
-    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int
-) -> DataFrame:
-    """-> (id, h0..h{k-1}, sz): MinHash signature + shingle-set size,
-    computed MAP-ONLY per row via ``array_min(transform(grams, x ->
-    xxhash64(seed, x)))``. Identical values to the explode +
-    groupBy(min) formulation with zero shuffle — but MEASURED 5x SLOWER
-    at bench scale, because Spark executes higher-order-function lambdas
-    interpreted per element (no whole-stage codegen inside transform),
-    while explode + hash-aggregate is fully codegen'd. Kept as the
-    documented counter-example: prefer the exploded aggregation unless
-    the shuffle itself dominates (very wide rows, very hot exchange)."""
-    grams = _grams_expr(text_col, n)
-    out = df.select(F.col(id_col).alias("id"), grams.alias("_g")).filter(
-        F.size("_g") > 0
-    )
-    return out.select(
-        "id",
-        *[
-            F.expr(f"array_min(transform(_g, x -> xxhash64({j}, x)))").alias(f"h{j}")
-            for j in range(num_hashes)
-        ],
-        F.size("_g").alias("sz"),
     )
 
 
@@ -198,7 +126,7 @@ def fuzzy_link_lsh(
 
     ``broadcast_dict=None`` (default) AUTO-selects the physical
     strategy from Catalyst's size estimate of the dictionary plan
-    (``estimated_bytes``): at or under ``broadcast_max_bytes`` the
+    (``plancheck.estimated_bytes``): at or under ``broadcast_max_bytes`` the
     bucket join broadcasts the banded dictionary rows (sets included —
     8x-duplicated map-side only, fine for a dimension table), and
     duplicate multi-band matches recompute the intersection map-side
@@ -235,16 +163,17 @@ def fuzzy_link_lsh(
     if pre_caches:
         reg.extend(pre_caches)
     if broadcast_dict is None:
-        broadcast_dict = _fits_broadcast(dictionary, broadcast_max_bytes)
+        broadcast_dict = fits_broadcast(dictionary, broadcast_max_bytes)
     hint = F.broadcast if broadcast_dict else (lambda df: df)
 
     # ONE union + groupBy computes MinHash signatures, set sizes, AND the
     # full shingle set per id for BOTH sides — the only wide exchange.
     # NOTE a measured trap: the "obvious" map-only form — array_min(
-    # transform(grams, x -> xxhash64(seed, x))) per row — is 5x SLOWER,
-    # because Spark's higher-order functions run INTERPRETED per element
-    # (no whole-stage codegen inside the lambda), while explode +
-    # hash-aggregate stays fully codegen'd (see shingle_stats docstring).
+    # transform(grams, x -> xxhash64(seed, x))) per row — gives identical
+    # values with zero shuffle but is 5x SLOWER at bench scale, because
+    # Spark's higher-order functions run INTERPRETED per element (no
+    # whole-stage codegen inside the lambda), while explode +
+    # hash-aggregate stays fully codegen'd.
     # The post-union xxhash64 maps each shingle string to a long ONCE,
     # before the wide exchange — see the docstring's size/verify note.
     tagged = char_shingles(mentions, id_col, text_col, n).withColumn(
@@ -335,15 +264,3 @@ def fuzzy_link_lsh(
         .select("src", "dst", "jaccard")
     )
 
-
-def link_paper_citations(
-    citations: DataFrame, dico: DataFrame, strategy: str = "auto", salt: int = 8
-) -> DataFrame:
-    """(url, tag) anchors -> (url, target)."""
-    resolved = _resolve(citations, dico, strategy, salt)
-    return resolved.select(
-        "url",
-        F.coalesce(
-            F.col("pdf_to_canon"), F.concat(F.lit("unresolved:"), F.col("tag"))
-        ).alias("target"),
-    )

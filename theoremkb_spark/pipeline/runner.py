@@ -3,23 +3,27 @@
 ``build_kg`` wires the six stages into one lazy DataFrame plan:
 
     pages --map-only Arrow extract--> fused
-      --repartition(url)--> spans/mentions
-      --broadcast dict (canonicalized via CC)--> triples
+      --repartition(url)--> one dictionary join (canonicalized via CC)
+      --conditional explode + rollup--> triples
 
 Triple vocabulary (north star): statement_of, proved_in, cites,
 defined_in — mapped from the reference's graph tables
 (graph_results/graph_intra_extra, extract_graph.py:298-307) as frozen in
-FIXTURES.md §6. Output is distinct on (subj, pred, obj, url) with
-group = min provenance span.
+FIXTURES.md §6, in ONE place: ``build_triples_fused``. Every labeler
+route and join regime feeds it a table of span, mention and cite rows
+in the ``extract.SPANS_FUSED_SCHEMA`` shape. Output is distinct on
+(subj, pred, obj, url) with group = min provenance span.
 
 In the fused (production) path the html NEVER shuffles: extraction is a
 map-only Arrow pass over the byte-balanced source scan, and the
 explicit url-hash repartition (north rule) lands on the ~40x smaller
-fused span table, whose HashPartitioning every downstream
-groupBy/window reuses. The dictionary join is broadcast; the CC loop
-runs on the tiny alias-edge table only. The window path (cross-check
-implementation) inverts the choice — there the token table is the big
-one, so the pages repartition before tokenization is the cheap side.
+fused span table, whose HashPartitioning the triple rollup reuses. The
+dictionary join is broadcast, or salted past BROADCAST_DICT_MAX_BYTES;
+the CC loop runs on the tiny alias-edge table only. The token paths
+(window rules, or a pickled sequence model) invert the choice — there
+the token table is the big one, so the pages repartition before
+tokenization is the cheap side — and union their spans, mentions and
+citations into the fused shape before assembly.
 """
 
 from __future__ import annotations
@@ -27,10 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plancheck import fits_broadcast
 from .canon import canonicalize_dict
 from .extract import extract_tokens
 from .label import label_tokens, label_tokens_arrow
-from .link import link_extra_mentions, link_paper_citations
+from .link import BROADCAST_DICT_MAX_BYTES, _resolve
 from .mentions import assemble_spans, mine_mentions, paper_citations, resolve_span_names
 
 TRIPLE_COLS = ["subj", "pred", "obj", "url", "group"]
@@ -63,96 +68,24 @@ def _entity(url_col, name_col):
     return F.concat(url_col, F.lit("#"), name_col)
 
 
-def build_triples(
-    spans_named: DataFrame,
-    mentions: DataFrame,
-    citations: DataFrame,
-    dico: DataFrame,
-    join_strategy: str = "auto",
+def build_triples_fused(
+    fused: DataFrame, dico: DataFrame, join_strategy: str = "broadcast"
 ) -> DataFrame:
-    """citations: (url, tag) doc-wide citation anchors — from
-    ``extract_spans`` (fused path) or ``paper_citations(tokens)``."""
-    url, own = F.col("url"), F.col("own_name")
-    named = spans_named.filter(own.isNotNull())
+    """The one triples assembly: a table of span, mention and cite rows
+    (``extract.SPANS_FUSED_SCHEMA``) -> (subj, pred, obj, url, group).
 
-    statement_of = (
-        named.select(
-            _entity(url, own).alias("subj"),
-            F.lit("statement_of").alias("pred"),
-            url.alias("obj"),
-            url.alias("url"),
-            F.col("group"),
-        )
-    )
-    proved_in = named.filter(F.col("label") == "proof").select(
-        _entity(url, own).alias("subj"),
-        F.lit("proved_in").alias("pred"),
-        url.alias("obj"),
-        url.alias("url"),
-        F.col("group"),
-    )
-    defined_in = named.filter(F.col("label") == "definition").select(
-        _entity(url, own).alias("subj"),
-        F.lit("defined_in").alias("pred"),
-        url.alias("obj"),
-        url.alias("url"),
-        F.col("group"),
-    )
+    Each row emits its triples through a conditional-array explode; the
+    dictionary is attached by ONE left join on (url, tag) through
+    ``link._resolve`` (``join_strategy``: broadcast, salted or auto).
 
-    m_named = mentions.filter(F.col("own_name").isNotNull())
-    cites_intra = m_named.filter(F.col("kind") == "intra").select(
-        _entity(url, own).alias("subj"),
-        F.lit("cites").alias("pred"),
-        _entity(url, F.col("ref_name")).alias("obj"),
-        url.alias("url"),
-        F.col("group"),
-    )
-    cites_extra = link_extra_mentions(m_named, dico, strategy=join_strategy).select(
-        _entity(url, own).alias("subj"),
-        F.lit("cites").alias("pred"),
-        _entity(F.col("target"), F.col("ref_name")).alias("obj"),
-        url.alias("url"),
-        F.col("group"),
-    )
-    cites_paper = link_paper_citations(citations, dico, strategy=join_strategy).select(
-        url.alias("subj"),
-        F.lit("cites").alias("pred"),
-        F.col("target").alias("obj"),
-        url.alias("url"),
-        F.lit(-1).alias("group"),
-    )
-
-    all_triples = (
-        statement_of.unionByName(proved_in)
-        .unionByName(defined_in)
-        .unionByName(cites_intra)
-        .unionByName(cites_extra)
-        .unionByName(cites_paper)
-    )
-    return all_triples.groupBy("subj", "pred", "obj", "url").agg(
-        F.min("group").alias("group")
-    )
-
-
-def build_triples_fused(fused: DataFrame, dico: DataFrame) -> DataFrame:
-    """Single-pass triples assembly over the url-hash-partitioned fused
-    table, for the broadcast-dictionary regime.
-
-    Semantically identical to ``build_triples`` over the fused table's
-    span/mention/cite projections (gated by the fused-vs-window identity
-    test and the kg oracle rows), but the physical plan collapses the
-    six branch scans of the cache (6 x n_partitions tasks) plus the
-    union's rollup exchange into ONE scan: each fused row emits its
-    triples through a conditional-array explode, the dictionary is
-    attached by a single broadcast left join (broadcast preserves the
-    stream side's partitioning), and the final
+    In the broadcast regime over the url-hash-partitioned fused table
+    there are zero shuffles downstream of the repartition: broadcast
+    preserves the stream side's partitioning, and the final
     groupBy(subj, pred, obj, url) reuses HashPartitioning(url) — url is
-    a subset of the grouping keys — so the rollup needs NO exchange.
-    Zero shuffles downstream of the fused repartition.
-
-    Only valid when the dictionary fits broadcast: the salted regime
-    (dictionary past BROADCAST_DICT_MAX_BYTES) keeps the ``build_triples``
-    union form, whose per-branch salted joins handle the hot-key skew.
+    a subset of the grouping keys — so the rollup needs NO exchange. The
+    salted regime (dictionary past BROADCAST_DICT_MAX_BYTES) shuffles
+    the join and the rollup instead, with the hot dictionary keys spread
+    over the salt (operators.joins.salted_join).
     """
     url, own = F.col("url"), F.col("own_name")
     kind, ref_kind = F.col("kind"), F.col("ref_kind")
@@ -160,24 +93,27 @@ def build_triples_fused(fused: DataFrame, dico: DataFrame) -> DataFrame:
         (kind == "cite")
         | ((kind == "span") & own.isNotNull())
         | ((kind == "mention") & own.isNotNull() & ref_kind.isin("intra", "extra"))
+    ).select(
+        "url",
+        "kind",
+        "group",
+        "label",
+        "own_name",
+        "ref_name",
+        "ref_kind",
+        # one join key column for both dictionary consumers: cite rows
+        # carry their anchor tag, extra-mention rows their mined ref_tag;
+        # span and intra rows get NULL (an equi-join never matches NULL,
+        # so they pass through the left join untouched)
+        F.when(kind == "cite", F.col("tag"))
+        .when((kind == "mention") & (ref_kind == "extra"), F.col("ref_tag"))
+        .alias("tag"),
     )
-    # one join key column for both dictionary consumers: cite rows carry
-    # their anchor tag, extra-mention rows their mined ref_tag; span and
-    # intra rows get NULL (an equi-join never matches NULL, so they pass
-    # through the left join untouched)
-    rel = rel.withColumn(
-        "_jtag",
-        F.when(kind == "cite", F.col("tag")).when(
-            (kind == "mention") & (ref_kind == "extra"), F.col("ref_tag")
-        ),
-    )
-    joined = rel.join(
-        F.broadcast(dico.withColumnRenamed("tag", "_jtag")), ["url", "_jtag"], "left"
-    )
+    joined = _resolve(rel, dico, join_strategy, salt=8)
 
     own_ent = _entity(url, own)
     target = F.coalesce(
-        F.col("pdf_to_canon"), F.concat(F.lit("unresolved:"), F.col("_jtag"))
+        F.col("pdf_to_canon"), F.concat(F.lit("unresolved:"), F.col("tag"))
     )
 
     def _t(subj, pred, obj, grp):
@@ -211,9 +147,8 @@ def build_triples_fused(fused: DataFrame, dico: DataFrame) -> DataFrame:
     return (
         joined.select("url", F.explode(F.array(e1, e2)).alias("_t"))
         .filter(F.col("_t").isNotNull())
-        # coalesce against a non-null literal restores pred's
-        # non-nullable schema flag (the union form's F.lit preds are
-        # non-nullable; a struct field out of a `when` chain is not) —
+        # coalesce against a non-null literal keeps pred's schema flag
+        # non-nullable (a struct field out of a `when` chain is not) —
         # value-neutral, pred is never NULL in surviving rows
         .select(
             "_t.subj",
@@ -282,83 +217,59 @@ def build_kg(
 
     # Fused path: the repartitioned table is the ~40x-reduced span table
     # (tens of MB at bench scale), so partitions = cores — every extra
-    # partition multiplies the task count of all six downstream branch
-    # scans of the cache (4x cores measured 768 tasks and 8.9 s min-of-5
-    # vs 5.2 s at 1x; see BENCH/RECONCILE_r03.md). Skew is already
-    # handled upstream: the map-only extraction balances html by
-    # byte-bounded scan splits, and url-hash spreads documents evenly.
-    # Window path: the repartition lands on the PAGES feeding a ~40x
-    # larger token table, where scheduler slack around document skew
-    # still pays — keep 4x there. At cluster scale the caller sizes
+    # partition only adds tasks downstream (4x cores measured 768 tasks
+    # and 8.9 s min-of-5 vs 5.2 s at 1x; see BENCH/RECONCILE_r03.md).
+    # Skew is already handled upstream: the map-only extraction balances
+    # html by byte-bounded scan splits, and url-hash spreads documents
+    # evenly. Token paths: the repartition lands on the PAGES feeding a
+    # ~40x larger token table, where scheduler slack around document
+    # skew still pays — keep 4x there. At cluster scale the caller sizes
     # this by target partition bytes (~128-512 MB) instead.
     if n_partitions is None:
         mult = 1 if labeler == "fused" else 4
         n_partitions = mult * spark.sparkContext.defaultParallelism
 
-    if join_strategy == "auto":
-        # decide ONCE here, from the RAW dictionary input: the
-        # canonicalized dico's own plan runs through the CC joins, whose
-        # Catalyst stats multiply into a useless overestimate, while
-        # canonicalization only ever SHRINKS the dictionary — so the
-        # pre-canon size is the conservative-correct broadcast basis.
-        # Resolved BEFORE the stage wiring because the strategy also
-        # decides the assembly form (single-pass vs union) and with it
-        # whether the fused table has one consumer or six (caching).
-        from .link import BROADCAST_DICT_MAX_BYTES, _fits_broadcast
-
-        basis = entity_dict if entity_dict is not None else dico
-        join_strategy = (
-            "broadcast"
-            if _fits_broadcast(basis, BROADCAST_DICT_MAX_BYTES)
-            else "salted"
-        )
-
     if labeler == "fused":
         # single Arrow pass: parse + label + span assembly + name
-        # resolution per document (extract.extract_spans), MAP-ONLY over
-        # the source scan: one page row is one whole document, so the
-        # per-doc UDF needs no co-location, and the scan's byte-bounded
-        # splits (spark.sql.files.maxPartitionBytes) already balance the
-        # html across tasks — shuffling the full html corpus before
-        # extraction was pure cost (measured 1.6x wall at 9600 docs;
-        # at 100 TB it is the difference between shuffling 100 TB and
-        # shuffling the ~40x smaller span table). The explicit url-hash
-        # repartition (north rule) is applied to the FUSED output
-        # instead, where it is nearly free and hands every downstream
-        # groupBy/window a reusable HashPartitioning.
+        # resolution + mention mining per document (extract.extract_spans),
+        # MAP-ONLY over the source scan: one page row is one whole
+        # document, so the per-doc UDF needs no co-location, and the
+        # scan's byte-bounded splits (spark.sql.files.maxPartitionBytes)
+        # already balance the html across tasks — shuffling the full html
+        # corpus before extraction was pure cost (measured 1.6x wall at
+        # 9600 docs; at 100 TB it is the difference between shuffling
+        # 100 TB and shuffling the ~40x smaller span table). The explicit
+        # url-hash repartition (north rule) is applied to the FUSED output
+        # instead, where it is nearly free and hands the triple rollup a
+        # reusable HashPartitioning.
         from .extract import extract_spans
 
         fused = extract_spans(
             pages, english_only=True, model_file=model_file
         ).repartition(n_partitions, F.col("url"))
-        # the broadcast-regime single-pass assembly (build_triples_fused)
-        # consumes fused exactly ONCE — caching there is pure overhead,
-        # and skipping it keeps the repartition's HashPartitioning(url)
-        # statically visible so the triple rollup plans with NO exchange
-        # (a cached plan hides its partitioning behind AdaptiveSparkPlan
-        # until materialized). The union form (salted regime) and the
-        # lineage hook scan fused repeatedly — cache for those.
-        if stages_out is not None or join_strategy != "broadcast":
-            fused = _cached(fused)
-        spans = fused.filter(F.col("kind") == "span").select(
-            "url", "group", "label", "text", "own_name"
-        )
-        citations = fused.filter(F.col("kind") == "cite").select("url", "tag")
-        # mention mining is fused into the same Arrow pass (refs_udf
-        # semantics inside extract_spans) — no second python stage, no
-        # extra cache round trip over the span table
-        mentions = fused.filter(F.col("kind") == "mention").select(
-            "url",
-            "group",
-            "label",
-            "own_name",
-            "ref_name",
-            F.col("ref_kind").alias("kind"),
-            "ref_tag",
-        )
+        # the assembly consumes fused exactly ONCE — caching there is
+        # pure overhead, and skipping it keeps the repartition's
+        # HashPartitioning(url) statically visible so the broadcast-regime
+        # rollup plans with NO exchange (a cached plan hides its
+        # partitioning behind AdaptiveSparkPlan until materialized). Only
+        # the lineage hook scans fused repeatedly — cache for it.
         if stages_out is not None:
+            fused = _cached(fused)
             stages_out.update(
-                fused=fused, spans=spans, mentions=mentions, citations=citations
+                fused=fused,
+                spans=fused.filter(F.col("kind") == "span").select(
+                    "url", "group", "label", "text", "own_name"
+                ),
+                mentions=fused.filter(F.col("kind") == "mention").select(
+                    "url",
+                    "group",
+                    "label",
+                    "own_name",
+                    "ref_name",
+                    F.col("ref_kind").alias("kind"),
+                    "ref_tag",
+                ),
+                citations=fused.filter(F.col("kind") == "cite").select("url", "tag"),
             )
     else:
         # token path: the token table is ~40x LARGER than the pages, so
@@ -368,10 +279,10 @@ def build_kg(
         # xxhash64(url)) and the token stream never re-shuffles.
         pages = pages.repartition(n_partitions, F.col("url"))
         # window-function path (cross-check implementation): tokens feed
-        # two consumers (span pipeline + paper citations) and spans feed
-        # four triple branches — cache both so the extract/label chain
-        # runs once, not once per branch. On a real cluster these are
-        # the materialized intermediate Iceberg tables (SURVEY §4).
+        # the span pipeline and the paper citations, and spans feed the
+        # assembly and mention mining — cache both so the extract/label
+        # chain runs once, not once per consumer. On a real cluster these
+        # are the materialized intermediate Iceberg tables (SURVEY §4).
         tokens = _cached(extract_tokens(pages, english_only=True))
         labeled = (
             label_tokens(tokens)
@@ -387,23 +298,49 @@ def build_kg(
 
         labeled = apply_parent_constraint(labeled, tokens)
         spans = _cached(resolve_span_names(assemble_spans(labeled)))
+        mentions = mine_mentions(spans)
         citations = paper_citations(tokens)
-        # two consumers (intra + extra cite branches) — cache so the
-        # mention mining UDF runs once over the span table
-        mentions = _cached(mine_mentions(spans))
         if stages_out is not None:
             stages_out.update(
                 tokens=tokens, spans=spans, mentions=mentions, citations=citations
             )
+        # the same span/mention/cite rows (by name) the fused Arrow
+        # pass emits, missing columns NULL
+        fused = (
+            spans.select(
+                "url", "group", "label", "text", "own_name", F.lit("span").alias("kind")
+            )
+            .unionByName(
+                mentions.withColumnRenamed("kind", "ref_kind").withColumn(
+                    "kind", F.lit("mention")
+                ),
+                allowMissingColumns=True,
+            )
+            .unionByName(
+                citations.withColumn("group", F.lit(-1).cast("long")).withColumn(
+                    "kind", F.lit("cite")
+                ),
+                allowMissingColumns=True,
+            )
+        )
+
+    if join_strategy == "auto":
+        # decide from the RAW dictionary input: the canonicalized dico's
+        # own plan runs through the CC joins, whose Catalyst stats
+        # multiply into a useless overestimate, while canonicalization
+        # only ever SHRINKS the dictionary — so the pre-canon size is the
+        # conservative-correct broadcast basis.
+        basis = entity_dict if entity_dict is not None else dico
+        join_strategy = (
+            "broadcast"
+            if fits_broadcast(basis, BROADCAST_DICT_MAX_BYTES)
+            else "salted"
+        )
     if dico is None:
-        # the dictionary is broadcast-sized and consumed by two joins —
-        # cache it so the CC canonicalization runs once
+        # cache the canonicalized dictionary so the CC canonicalization
+        # runs once, not once per action on the triples
         dico = _cached(canonicalize_dict(entity_dict))
-    if labeler == "fused" and join_strategy == "broadcast":
-        # single-pass assembly: one scan of the fused cache, one
-        # broadcast join, rollup exchange-free (see build_triples_fused)
-        return build_triples_fused(fused, dico)
-    return build_triples(spans, mentions, citations, dico, join_strategy=join_strategy)
+    return build_triples_fused(fused, dico, join_strategy=join_strategy)
 
 
 def lineage_rows(df: DataFrame, stage: str) -> DataFrame:

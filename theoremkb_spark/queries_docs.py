@@ -270,10 +270,10 @@ def _adaptive_spread_width(df, spark, bytes_per_task: int = 75_000) -> int:
     saturates the cores (width caps at defaultParallelism). At cluster
     scale the writer's row-group sizing gives the scan real splits and
     the spread is a cheap keyed exchange either way."""
-    from .operators.dedup import _estimated_bytes
+    from .plancheck import STATS_UNKNOWN, estimated_bytes
 
-    est = _estimated_bytes(df)
-    if est >= (1 << 62):  # unknowable stats (driver-local frame)
+    est = estimated_bytes(df)
+    if est == STATS_UNKNOWN:  # driver-local frame
         return spark.sparkContext.defaultParallelism
     return max(
         1, min(spark.sparkContext.defaultParallelism, est // bytes_per_task)
@@ -446,10 +446,10 @@ def q_sim_tfidf_topk(spark, sf):
     direction). Threshold is module-level so the regime test can force
     the large branch."""
     import theoremkb_spark.queries_docs as _self
-    from .pipeline.link import _fits_broadcast
+    from .plancheck import fits_broadcast
 
     def _maybe_bc(frame):
-        if _fits_broadcast(frame, _self.SIM_TFIDF_BROADCAST_MAX_BYTES):
+        if fits_broadcast(frame, _self.SIM_TFIDF_BROADCAST_MAX_BYTES):
             return F.broadcast(frame)
         return frame
 
